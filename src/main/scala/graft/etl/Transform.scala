@@ -38,9 +38,12 @@ object Transform {
   /** O-07: distributed schema-enforcement split. Valid rows pass through
     * unchanged; invalid rows become DLQ records
     * `{raw_data, error_reason, timestamp, validation_type}`
-    * (ref: glue/data_transform_s3.py:89-94). One scan, zero collects —
-    * at 100 TB the two filters share the cached/pushed-down scan and
-    * each side writes from the executors.
+    * (ref: glue/data_transform_s3.py:89-94). Zero collects: each side
+    * is a filter that evaluates and writes on the executors. Nothing is
+    * cached here, so each side that runs an action scans `df` itself;
+    * a caller that consumes both sides, or one side more than once,
+    * materializes what it reuses (as `Medallion.run` does with the
+    * deduped valid side).
     */
   def schemaSplit(
       df: DataFrame,

@@ -15,9 +15,25 @@ import graft.sinks.Writers
   * (ref: Step Function/crypto-etl-pipeline.asl.json:5-76) as composed
   * DataFrame stages. State passes in-process; only the medallion layer
   * boundaries persist (Silver/Gold parquet), not every stage.
+  *
+  * The one in-process hand-off that is materialized is the deduped
+  * Silver candidate: the transform stage `localCheckpoint`s it eagerly,
+  * so the DQ aggregates, the Silver append, the fact overwrite and both
+  * dim merges read those rows from the executors' block stores instead
+  * of each re-running the Bronze JSON scan, the cast projection and the
+  * dedup shuffle. It is the reference's "read the input once per step"
+  * (each Glue job reads its S3 input once) in a single process, and
+  * it stays small at any Bronze size: at most one row per coin per day.
   */
 object Medallion {
 
+  /** What one run wrote. `silver`, `fact`, `dimCoins` and `dimDate`
+    * are the written rows: they read the materialized Silver candidate
+    * or the files just written, never Bronze, so they stay valid after
+    * the landing files are gone (until the next run rewrites the dims).
+    * `dlq` stays a lazy view over Bronze: evaluating it again re-scans
+    * the landing files and stamps a new `timestamp`.
+    */
   final case class Outputs(
       silver: DataFrame,
       dlq: DataFrame,
@@ -80,10 +96,12 @@ object Medallion {
           projected, graft.schema.Schemas.cryptoRequired)
         Writers.dlqAppend(bad, s"$outDir/dlq")
         dlq = bad
+        // Materialized once: every later stage reads these rows, not Bronze
         Right(Transform.dedupLatest(
           valid,
           partitionCols = Seq("coin_id", "update_date"),
-          orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last)))
+          orderCols = Seq(col("last_updated_ts").desc, col("market_cap_rank").asc_nulls_last))
+          .localCheckpoint())
       }
 
     // DQ gate (ref DQDL ruleset) on the deduped silver candidate
@@ -92,24 +110,18 @@ object Medallion {
         StageFailure("data_quality",
           failures.map(f => s"${f.rule} (observed=${f.observed})").mkString("; ")))
 
-    // Gold: fact with dynamic partition overwrite + dims merged
+    // Gold: fact with dynamic partition overwrite + dims merged into
+    // what earlier runs wrote (ref: glue/data_aggregate_gold.py:102-188)
     val gold: Pipeline.Stage = Pipeline.stage { s =>
       silver = s
       Writers.parquetAppendPartitioned(s, s"$outDir/silver", "update_date")
       fact = s.withColumnRenamed("update_date", "date")
         .filter(col("coin_id").isNotNull)
       Writers.parquetDynamicOverwrite(fact, s"$outDir/fact_crypto_daily", "date")
-      dimCoins = Star.mergeDim(
-        Pipeline.readOrEmpty(spark, s"$outDir/dim_coins",
-          StructType(Seq(
-            StructField("coin_id", StringType),
-            StructField("symbol", StringType),
-            StructField("name", StringType)))),
-        Star.dimFrom(s, Seq("coin_id", "symbol", "name")),
-        Seq("coin_id"))
-      Writers.parquetOverwrite(dimCoins, s"$outDir/dim_coins")
-      dimDate = Star.dimDate(fact, "date")
-      Writers.parquetOverwrite(dimDate, s"$outDir/dim_date")
+      // mergeDim dedups on the key, so the incoming side needs no distinct
+      dimCoins = mergeDimInto(spark, s.select("coin_id", "symbol", "name"),
+        Seq("coin_id"), s"$outDir/dim_coins")
+      dimDate = mergeDimInto(spark, Star.dimDate(fact, "date"), Seq("date"), s"$outDir/dim_date")
       fact
     }
 
@@ -117,5 +129,18 @@ object Medallion {
       Seq("transform" -> transform, "data_quality" -> dataQuality, "gold" -> gold),
       s"$outDir/notifications")
       .map(_ => Outputs(silver, dlq, fact, dimCoins, dimDate))
+  }
+
+  /** Merge `incoming` into the dim table at `path` on `keyCols`
+    * ([[Star.mergeDim]] over [[Pipeline.readOrEmpty]]), overwrite it,
+    * and return the table as written. Reading and overwriting one path
+    * is safe because the merge's key shuffle reads the old files before
+    * the overwrite replaces them.
+    */
+  private def mergeDimInto(
+      spark: SparkSession, incoming: DataFrame, keyCols: Seq[String], path: String): DataFrame = {
+    Writers.parquetOverwrite(
+      Star.mergeDim(Pipeline.readOrEmpty(spark, path, incoming.schema), incoming, keyCols), path)
+    spark.read.schema(incoming.schema).parquet(path)
   }
 }

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Engine-level orchestration (O-67..O-71): the reference's Step
@@ -38,10 +39,15 @@ object Pipeline {
 
   /** O-69: table-not-exists fallback
     * (ref: glue/data_aggregate_gold.py:73-91 try/except → start fresh).
+    * Probes the path on its file system rather than letting the read
+    * throw, so a first write logs no missing-path stack trace.
     */
-  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    Try(spark.read.schema(schema).parquet(path)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(schema).parquet(path)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
 
   /** Success/failure notification record, the SNS-topic analogue of the
     * ASL NotifySuccess/NotifyFailure terminal states

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,8 +11,8 @@ import graft.sources.Readers
 class MedallionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def bronzeJson(n: Int): Seq[String] =
-    (1 to n).map { i =>
+  private def bronzeJson(n: Int, from: Int = 1): Seq[String] =
+    (from until from + n).map { i =>
       s"""{"id":"coin_$i","symbol":"c$i","name":"Coin $i","current_price":${i * 1.5},
          |"market_cap":${i * 2000000},"market_cap_rank":$i,"total_volume":${i * 100},
          |"high_24h":${i * 1.6},"low_24h":${i * 1.4},"price_change_24h":0.1,
@@ -52,6 +53,91 @@ class MedallionSpec extends SparkSpec {
     // terminal notification recorded the success
     assert(spark.read.json(s"$out/notifications")
       .select("status").as[String].head() == "SUCCEEDED")
+  }
+
+  /** Writes `rows` as one JSONL landing file; returns it. */
+  private def land(dir: String, rows: Seq[String]): java.nio.file.Path = {
+    val f = java.nio.file.Paths.get(s"$dir/batch=1/bronze.json")
+    Files.createDirectories(f.getParent)
+    Files.writeString(f, rows.mkString("\n"))
+  }
+
+  /** Data files (not checksums or markers) directly under `dir`. */
+  private def dataFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filter(_.startsWith("part-"))
+
+  test("dims merge across runs: dim_date and dim_coins keep every earlier day's keys") {
+    val out = tempDir("graft-medallion-days")
+    val tue = java.time.Instant.parse("2024-03-05T12:00:00Z")
+    val sat = java.time.Instant.parse("2024-03-09T12:00:00Z")
+    assert(Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(60)), out, tue).isRight)
+    assert(Medallion.run(spark, Readers.jsonStrings(spark, bronzeJson(60, from = 41)), out, sat).isRight)
+
+    val dimDate = spark.read.parquet(s"$out/dim_date")
+      .select(col("date").cast("string"), col("day_of_week"), col("is_weekend"))
+      .as[(String, Int, Boolean)].collect().sortBy(_._1).toSeq
+    assert(dimDate == Seq(("2024-03-05", 3, false), ("2024-03-09", 7, true)))
+    // coins 1-60 then 41-100
+    assert(spark.read.parquet(s"$out/dim_coins").count() == 100)
+
+    // one data file per day partition and per dim table
+    for (day <- Seq("2024-03-05", "2024-03-09")) {
+      assert(dataFiles(s"$out/silver/update_date=$day").size == 1, day)
+      assert(dataFiles(s"$out/fact_crypto_daily/date=$day").size == 1, day)
+    }
+    assert(dataFiles(s"$out/dim_coins").size == 1)
+    assert(dataFiles(s"$out/dim_date").size == 1)
+  }
+
+  test("Outputs are the rows written: they survive the landing files' removal") {
+    val tmp = tempDir("graft-medallion-outputs")
+    val file = land(s"$tmp/landing", bronzeJson(60))
+    val bronze = Readers.jsonRecursive(spark, s"$tmp/landing")
+    val res = Medallion.run(spark, bronze, s"$tmp/out",
+      java.time.Instant.parse("2024-03-05T12:00:00Z"))
+    assert(res.isRight, res.left.toOption.map(_.reason))
+    Files.delete(file)
+
+    val o = res.toOption.get
+    assert(o.silver.count() == 60)
+    assert(o.fact.count() == 60)
+    assert(o.dimCoins.count() == 60)
+    assert(o.dimDate.count() == 1)
+  }
+
+  test("one run reads Bronze at most 3 times: later stages read the materialized candidate") {
+    val tmp = tempDir("graft-medallion-scans")
+    // 60 coins x 40 ticks: the deduped candidate is a small share of Bronze
+    val bronzeBytes = Files.size(land(s"$tmp/landing", Seq.fill(40)(bronzeJson(60)).flatten)).toDouble
+    val bronze = Readers.jsonRecursive(spark, s"$tmp/landing")
+
+    val bytesRead = new java.util.concurrent.atomic.LongAdder
+    val drainKey = "graft.test.drain"
+    val drained = scala.concurrent.Promise[Unit]()
+    @volatile var drainJob = -1
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytesRead.add(m.inputMetrics.bytesRead))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(drainKey) != null)) drainJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == drainJob) drained.trySuccess(())
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val res = Medallion.run(spark, bronze, s"$tmp/out",
+        java.time.Instant.parse("2024-03-05T12:00:00Z"))
+      assert(res.isRight, res.left.toOption.map(_.reason))
+      // a listener gets events in order: once a job submitted after the
+      // run has ended, every task of the run has been counted
+      sc.setLocalProperty(drainKey, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(drainKey, null)
+      scala.concurrent.Await.result(drained.future, scala.concurrent.duration.Duration(60, "s"))
+    } finally sc.removeSparkListener(listener)
+
+    val amplification = bytesRead.sum / bronzeBytes
+    assert(amplification <= 3.0, f"read $amplification%.2fx the Bronze bytes")
   }
 
   test("silver output is viewable as a typed Dataset[CryptoTick]") {
