@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming jobs re-expressing the reference's Lambda
   * architecture (ref: streaming/consumer.py, streaming/producer.py):
@@ -19,43 +19,52 @@ object Jobs {
 
   private val streamId = new AtomicInteger(0)
 
+  /** The one place a streaming query runs: set the checkpoint when one
+    * is given, then drain everything available as AvailableNow
+    * micro-batches and block until the query stops.
+    */
+  private[stream] def runAvailableNow[T](
+      writer: DataStreamWriter[T], checkpoint: Option[String]): Unit =
+    checkpoint.fold(writer)(writer.option("checkpointLocation", _))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** Shared verify-path mechanics: run `df` as one AvailableNow pass
     * into a uniquely-named memory sink and return the collected table.
     * The memory sink is the VERIFY surface only — production jobs use
     * the parquet / foreachBatch runners with checkpoints.
     */
-  private def runToMemorySink(
+  private[stream] def runToMemorySink(
       spark: SparkSession, df: DataFrame, namePrefix: String): DataFrame = {
     val name = s"${namePrefix}_${streamId.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(
+      df.writeStream.format("memory").queryName(name).outputMode("append"), None)
     spark.table(name)
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily set —
-    * the state-store sizing knob for stateful streams: the partition
-    * count is recorded in the checkpoint at the FIRST micro-batch and
-    * cannot change afterwards, so streaming jobs size it to expected
-    * key cardinality up front (a fleet-scale job wants many state
-    * partitions; a bounded replay wants few — per-partition state
-    * commits are pure overhead beyond the key count). Restores the
-    * session value afterwards.
+  /** Run `f` with session conf `key` set to `value` (no change when
+    * None), then restore the prior value, or unset the key if it had
+    * none. The stateful runners scope two keys this way: the state-store
+    * provider, and `spark.sql.shuffle.partitions` — the state-store
+    * sizing knob: the partition count is recorded in the checkpoint at
+    * the FIRST micro-batch and cannot change afterwards, so streaming
+    * jobs size it to expected key cardinality up front (a fleet-scale
+    * job wants many state partitions; a bounded replay wants few —
+    * per-partition state commits are pure overhead beyond the key
+    * count).
     */
-  private[stream] def withShufflePartitions[T](
-      spark: SparkSession, n: Option[Int])(f: => T): T =
-    n match {
+  private[stream] def withConf[T](
+      spark: SparkSession, key: String, value: Option[String])(f: => T): T =
+    value match {
       case None => f
-      case Some(p) =>
-        val key = "spark.sql.shuffle.partitions"
-        val old = spark.conf.get(key)
-        spark.conf.set(key, p.toString)
-        try f finally spark.conf.set(key, old)
+      case Some(v) =>
+        val old = spark.conf.getOption(key)
+        spark.conf.set(key, v)
+        try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
+
+  private[stream] val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Validation rules for the `events` testdata stream, same shape as
     * the crypto consumer's (ref: streaming/consumer.py:47-57).
@@ -106,11 +115,6 @@ object Jobs {
         col("w.start").as("window_start"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Watermarked streaming variant of [[windowedAgg]] (O-66 note):
-    * late data beyond `lateness` is dropped once the watermark passes.
-    * Used by streaming tests with multi-batch file sources; not oracle
-    * checked (watermark emission depends on batch boundaries).
-    */
   /** Output schema of [[runWindowedStream]]. */
   val windowedSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -123,7 +127,12 @@ object Jobs {
       org.apache.spark.sql.types.StructField("sum_value",
         org.apache.spark.sql.types.DoubleType)))
 
-  /** In append mode a window only emits once the watermark passes its
+  /** Watermarked streaming variant of [[windowedAgg]] (O-66 note):
+    * late data beyond `lateness` is dropped once the watermark passes.
+    * Used by streaming tests with multi-batch file sources; not oracle
+    * checked (watermark emission depends on batch boundaries).
+    *
+    * In append mode a window only emits once the watermark passes its
     * end — i.e. on a LATER batch. Callers re-run with the same
     * `checkpoint`+`outPath` after appending newer input files; each run
     * appends the windows the new data closed (parquet sink — the memory
@@ -139,20 +148,16 @@ object Jobs {
       slide: Option[String] = None,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
       val schema = graft.schema.Schemas.events
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(inputDir)
       val agg = windowedAgg(stream.withWatermark("ts", lateness),
         windowDuration, slide)
-      val q = agg.writeStream
+      runAvailableNow(agg.writeStream
         .format("parquet")
         .option("path", outPath)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode("append"), Some(checkpoint))
       spark.read.schema(windowedSchema).parquet(outPath)
     }
 
@@ -180,7 +185,7 @@ object Jobs {
       keyCols: Seq[String] = Seq("event_id"),
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
       val schema = graft.schema.Schemas.events
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(inputDir)
@@ -209,7 +214,7 @@ object Jobs {
       maxGap: String,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
       val schema = graft.schema.Schemas.events
       def side(etype: String, idAs: String, userAs: String, tsAs: String) =
         spark.readStream.schema(schema)
@@ -242,7 +247,7 @@ object Jobs {
       lateness: String,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
       val schema = graft.schema.Schemas.events
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(inputDir)
@@ -284,17 +289,13 @@ object Jobs {
       keyCol: String = "user_id"): Unit = {
     val schema = graft.schema.Schemas.events
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val latest = graft.etl.Transform.dedupLatestAgg(
           batch, Seq(keyCol), Seq(col("ts"), col("event_id")))
         graft.sinks.Writers.kvUpsert(spark, latest, Seq(keyCol), tablePath)
         ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(checkpoint))
   }
 
   /** Exactly-once filesystem sink stream: every micro-batch lands via
@@ -311,16 +312,12 @@ object Jobs {
       outPath: String,
       checkpoint: String): Unit = {
     val schema = graft.schema.Schemas.events
-    val q = spark.readStream.schema(schema).parquet(inputDir)
+    runAvailableNow(spark.readStream.schema(schema).parquet(inputDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sinks.Writers.idempotentBatchWrite(batch, batchId, outPath)
         ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(checkpoint))
   }
 
   /** INCREMENTAL CDC apply as a stream: each micro-batch of change
@@ -342,15 +339,11 @@ object Jobs {
     * because the snapshot retains payload only — a pipeline that can
     * receive late sequences keeps `seqCol` (and delete tombstones) in
     * the snapshot instead. In production the version pointer lives in
-    * table metadata beside the checkpoint; here it re-derives from the
-    * snapshot directory itself: on start, the highest existing
-    * `v=<id>` under `snapshotPath` becomes the merge base, so a
-    * RESUMED checkpoint (file source skips already-applied batches)
-    * continues from the last published snapshot instead of silently
-    * re-merging into `base` and discarding prior changes. A run whose
-    * checkpoint already covers every change file publishes nothing new
-    * and returns the recovered version (instead of throwing a
-    * misleading "no change files found").
+    * table metadata beside the checkpoint; here [[runVersioned]]
+    * re-derives it from the snapshot directory itself, so a RESUMED
+    * checkpoint merges into the last published snapshot instead of
+    * silently re-merging into `base`, and a replay over a wiped
+    * checkpoint rewrites no published snapshot.
     */
   def runChangelogStream(
       spark: SparkSession,
@@ -361,29 +354,15 @@ object Jobs {
       seqCol: String,
       opCol: String,
       snapshotPath: String,
-      checkpoint: String): Long = {
-    var lastV = publishedVersion(spark, snapshotPath)
-    val q = spark.readStream.schema(changesSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev =
-          if (lastV < 0) base
-          else spark.read.parquet(s"$snapshotPath/v=$lastV")
-        graft.etl.Transform.applyChangelog(prev, batch, keyCols, seqCol, opCol)
-          .write.mode("overwrite").parquet(s"$snapshotPath/v=$batchId")
-        lastV = batchId
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0,
-      s"no change files found under $changesDir and no prior snapshot under $snapshotPath")
-    lastV
-  }
+      checkpoint: String): Long =
+    runVersioned(spark, changesDir, changesSchema, 1,
+      snapshotPath, checkpoint) { (batch, batchId, prevV) =>
+      val prev =
+        if (prevV < 0) base
+        else spark.read.parquet(s"$snapshotPath/v=$prevV")
+      graft.etl.Transform.applyChangelog(prev, batch, keyCols, seqCol, opCol)
+        .write.mode("overwrite").parquet(s"$snapshotPath/v=$batchId")
+    }
 
   /** Storage geometry of [[runNearDupDedupStream]]'s persisted band
     * index: bucket ids are md5 hex strings, so the first two hex
@@ -485,9 +464,50 @@ object Jobs {
       published, gens.filter(_ > published).toSeq, sortCol = Some(sortCol))
   }
 
+  /** The versioned-publish skeleton every exactly-once state stream
+    * shares: stream `inputDir` (`filesPerTrigger` files per
+    * micro-batch) on `checkpoint`, and hand each batch to
+    * `step(batch, batchId, prevVersion)`, where `prevVersion` is the
+    * last published version (-1 before the first). On start the
+    * highest existing `publishRoot/v=<id>` is the previous version, so
+    * a RESUMED checkpoint continues from the last publish instead of
+    * from scratch. A batch with `batchId <= prevVersion` is already
+    * published (a replay after a crash between the publish and the
+    * checkpoint commit, or a wiped checkpoint) and is skipped, so it
+    * is never merged twice nor read as its own previous version. That
+    * makes `publishRoot/v=<batchId>` the replay marker: each `step`
+    * must write it LAST, after every other write of the batch.
+    * Returns the last published version; a run whose checkpoint
+    * already covers every file publishes nothing and returns the
+    * recovered one.
+    */
+  private def runVersioned(
+      spark: SparkSession,
+      inputDir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      filesPerTrigger: Int,
+      publishRoot: String,
+      checkpoint: String)(
+      step: (DataFrame, Long, Long) => Unit): Long = {
+    var lastV = publishedVersion(spark, publishRoot)
+    runAvailableNow(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger)
+      .parquet(inputDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (lastV < batchId) {
+          step(batch, batchId, lastV)
+          lastV = batchId
+        }
+      }, Some(checkpoint))
+    require(lastV >= 0,
+      s"no input files found under $inputDir and no published version under $publishRoot")
+    lastV
+  }
+
   /** Highest published `v=<id>` under `snapshotPath`, or -1 when none
     * exist (first run / fresh directory) — the crash-safe version
-    * pointer [[runChangelogStream]] resumes from.
+    * pointer [[runVersioned]] resumes from.
     */
   private def publishedVersion(spark: SparkSession, snapshotPath: String): Long = {
     val hPath = new org.apache.hadoop.fs.Path(snapshotPath)
@@ -499,12 +519,6 @@ object Jobs {
       .foldLeft(-1L)(math.max)
   }
 
-  /** O-61/O-62: foreachBatch dual-write — persist the batch once, split
-    * good/bad, write each side plus alerts (ref: streaming/consumer.py:
-    * 59-102 routes good→DynamoDB, bad→DLQ+S3, surges→SNS). Sinks are
-    * parquet dirs here; exactly-once per sink within a batch comes from
-    * the persisted split + checkpointed batch ids.
-    */
   /** STREAMING corpus curation — the batch capstone's gate →
     * decontaminate → dedup front half as ONE incremental stream, so a
     * corpus can be curated as it lands instead of in a nightly batch:
@@ -536,7 +550,7 @@ object Jobs {
       shingleSize: Int,
       lateness: String,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType, nullable = false),
@@ -578,8 +592,8 @@ object Jobs {
     * stays O(batch)). The versioned corpus/plan layout is the
     * crash-safe publish pattern of [[runChangelogStream]]: a resumed
     * checkpoint continues from the highest published version.
-    */
-  /** `filesPerTrigger` sets the micro-batch granularity. The
+    *
+    * `filesPerTrigger` sets the micro-batch granularity. The
     * published plan at each version is a pure function of the corpus
     * accumulated so far, and consumers read only the LAST published
     * version — so results are identical at ANY granularity and
@@ -596,37 +610,20 @@ object Jobs {
       planOf: DataFrame => DataFrame,
       filesPerTrigger: Int = 1): DataFrame = {
     require(filesPerTrigger >= 1, "filesPerTrigger must be >= 1")
-    var lastV = publishedVersion(spark, s"$workDir/plan")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Replay safety: a batch can be re-delivered after its plan
-        // version was already PUBLISHED (crash between the plan write
-        // and the checkpoint commit). lastV >= batchId then means both
-        // writes for this batch finished — re-appending would read
-        // corpus/v=batchId as its own prev (an overwrite-while-reading
-        // error) and duplicate the batch's rows. Skip: the publish is
-        // the idempotence marker, exactly like runChangelogStream's
-        // recovered-version path.
-        if (lastV < batchId) {
-          val prev =
-            if (lastV < 0) batch.limit(0)
-            else spark.read.parquet(s"$workDir/corpus/v=$lastV")
-          prev.unionByName(batch)
-            .write.mode("overwrite").parquet(s"$workDir/corpus/v=$batchId")
-          planOf(spark.read.parquet(s"$workDir/corpus/v=$batchId"))
-            .write.mode("overwrite").parquet(s"$workDir/plan/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    // the plan is published after the corpus snapshot: a replayed batch
+    // whose plan is published skips, instead of reading corpus/v=batchId
+    // as its own prev (an overwrite-while-reading error) and duplicating
+    // the batch's rows
+    val lastV = runVersioned(spark, inputDir, schema, filesPerTrigger,
+      s"$workDir/plan", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      val prev =
+        if (prevV < 0) batch.limit(0)
+        else spark.read.parquet(s"$workDir/corpus/v=$prevV")
+      prev.unionByName(batch)
+        .write.mode("overwrite").parquet(s"$workDir/corpus/v=$batchId")
+      planOf(spark.read.parquet(s"$workDir/corpus/v=$batchId"))
+        .write.mode("overwrite").parquet(s"$workDir/plan/v=$batchId")
+    }
     spark.read.parquet(s"$workDir/plan/v=$lastV")
   }
 
@@ -650,29 +647,16 @@ object Jobs {
       stateOf: DataFrame => DataFrame,
       keyCols: Seq[String],
       measureCols: Seq[String]): DataFrame = {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val bState = stateOf(batch)
-          val merged =
-            if (lastV < 0) bState
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/state/v=$lastV"), bState),
-              keyCols, measureCols)
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    val lastV = runVersioned(spark, inputDir, schema, 1,
+      s"$workDir/state", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      val bState = stateOf(batch)
+      val merged =
+        if (prevV < 0) bState
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/state/v=$prevV"), bState),
+          keyCols, measureCols)
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
     spark.read.parquet(s"$workDir/state/v=$lastV")
   }
 
@@ -698,33 +682,20 @@ object Jobs {
       inputDir: String,
       schema: org.apache.spark.sql.types.StructType,
       workDir: String): (DataFrame, DataFrame, DataFrame) = {
-    var lastV = publishedVersion(spark, s"$workDir/stats")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val (postings, dl, stats) =
-            graft.ext.Text.bm25Index(batch, "doc_id", "text")
-          graft.sinks.Writers.idempotentBatchWrite(
-            postings, batchId, s"$workDir/postings")
-          graft.sinks.Writers.idempotentBatchWrite(dl, batchId, s"$workDir/dl")
-          val merged =
-            if (lastV < 0) stats
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/stats/v=$lastV"), stats),
-              Nil, Seq("n", "sdl"))
-          merged.write.mode("overwrite").parquet(s"$workDir/stats/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    val lastV = runVersioned(spark, inputDir, schema, 1,
+      s"$workDir/stats", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      val (postings, dl, stats) =
+        graft.ext.Text.bm25Index(batch, "doc_id", "text")
+      graft.sinks.Writers.idempotentBatchWrite(
+        postings, batchId, s"$workDir/postings")
+      graft.sinks.Writers.idempotentBatchWrite(dl, batchId, s"$workDir/dl")
+      val merged =
+        if (prevV < 0) stats
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/stats/v=$prevV"), stats),
+          Nil, Seq("n", "sdl"))
+      merged.write.mode("overwrite").parquet(s"$workDir/stats/v=$batchId")
+    }
     (spark.read.parquet(s"$workDir/postings"),
       spark.read.parquet(s"$workDir/dl"),
       spark.read.parquet(s"$workDir/stats/v=$lastV"))
@@ -753,44 +724,31 @@ object Jobs {
       valueCol: String,
       k: Int,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
     // the batch-side plans resolve against the OUTER session (the
     // merged frame's left operand is spark.read), the stream-side
     // against the micro-batch's CLONED session — temp functions must
     // exist on both (registered again per batch below)
     graft.ext.KllAgg.register(spark)
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          // the micro-batch runs in a CLONED session whose function
-          // registry does not inherit temp functions registered on
-          // the outer session — re-register on the batch's own
-          graft.ext.KllAgg.register(batch.sparkSession)
-          val bSk = batch.filter(col(valueCol).isNotNull)
-            .groupBy(col(keyCol))
-            .agg(graft.ext.KllAgg.kllAgg(col(valueCol), k).as("sk"),
-              count(lit(1)).as("n_rows"))
-          val merged =
-            if (lastV < 0) bSk
-            else spark.read.parquet(s"$workDir/state/v=$lastV")
-              .unionByName(bSk)
-              .groupBy(col(keyCol))
-              .agg(graft.ext.KllAgg.kllMergeAgg(col("sk"), k).as("sk"),
-                sum(col("n_rows")).as("n_rows"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    val lastV = runVersioned(spark, inputDir, schema, 1,
+      s"$workDir/state", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      // the micro-batch runs in a CLONED session whose function
+      // registry does not inherit temp functions registered on
+      // the outer session — re-register on the batch's own
+      graft.ext.KllAgg.register(batch.sparkSession)
+      val bSk = batch.filter(col(valueCol).isNotNull)
+        .groupBy(col(keyCol))
+        .agg(graft.ext.KllAgg.kllAgg(col(valueCol), k).as("sk"),
+          count(lit(1)).as("n_rows"))
+      val merged =
+        if (prevV < 0) bSk
+        else spark.read.parquet(s"$workDir/state/v=$prevV")
+          .unionByName(bSk)
+          .groupBy(col(keyCol))
+          .agg(graft.ext.KllAgg.kllMergeAgg(col("sk"), k).as("sk"),
+            sum(col("n_rows")).as("n_rows"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
     spark.read.parquet(s"$workDir/state/v=$lastV")
   }
 
@@ -816,37 +774,24 @@ object Jobs {
       shingleSize: Int,
       k: Int,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val bSk = graft.ext.Dedup.kmvSketch(
-            batch, groupCol, textCol, shingleSize, k)
-          val merged =
-            if (lastV < 0) bSk
-            else spark.read.parquet(s"$workDir/state/v=$lastV")
-              .unionByName(bSk)
-              .groupBy(col("grp"))
-              .agg(slice(
-                // distinct BEFORE the k-cut: the same shingle hash
-                // arrives from every batch that contains it, and a
-                // duplicated small hash would evict a real k-th value
-                array_sort(array_distinct(flatten(collect_list(col("sig"))))),
-                1, k).as("sig"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
+    val lastV = runVersioned(spark, inputDir, schema, 1,
+      s"$workDir/state", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      val bSk = graft.ext.Dedup.kmvSketch(
+        batch, groupCol, textCol, shingleSize, k)
+      val merged =
+        if (prevV < 0) bSk
+        else spark.read.parquet(s"$workDir/state/v=$prevV")
+          .unionByName(bSk)
+          .groupBy(col("grp"))
+          .agg(slice(
+            // distinct BEFORE the k-cut: the same shingle hash
+            // arrives from every batch that contains it, and a
+            // duplicated small hash would evict a real k-th value
+            array_sort(array_distinct(flatten(collect_list(col("sig"))))),
+            1, k).as("sig"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
     spark.read.parquet(s"$workDir/state/v=$lastV")
   }
 
@@ -867,34 +812,21 @@ object Jobs {
       workDir: String,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): (DataFrame, DataFrame) =
-    withShufflePartitions(spark, stateShufflePartitions) {
-    var lastV = publishedVersion(spark, s"$workDir/state")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          val chunks = graft.ext.Dedup.cdcChunks(batch, "doc_id", "text")
-          graft.sinks.Writers.idempotentBatchWrite(
-            chunks, batchId, s"$workDir/chunks")
-          val bState = chunks.groupBy(col("chunk_text"))
-            .agg(countDistinct(col("doc_id")).as("n_docs_with"))
-          val merged =
-            if (lastV < 0) bState
-            else graft.etl.Transform.mergeAggStates(
-              Seq(spark.read.parquet(s"$workDir/state/v=$lastV"), bState),
-              Seq("chunk_text"), Seq("n_docs_with"))
-          merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
-          lastV = batchId
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+    withConf(spark, ShufflePartitions, stateShufflePartitions.map(_.toString)) {
+    val lastV = runVersioned(spark, inputDir, schema, filesPerTrigger,
+      s"$workDir/state", s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      val chunks = graft.ext.Dedup.cdcChunks(batch, "doc_id", "text")
+      graft.sinks.Writers.idempotentBatchWrite(
+        chunks, batchId, s"$workDir/chunks")
+      val bState = chunks.groupBy(col("chunk_text"))
+        .agg(countDistinct(col("doc_id")).as("n_docs_with"))
+      val merged =
+        if (prevV < 0) bState
+        else graft.etl.Transform.mergeAggStates(
+          Seq(spark.read.parquet(s"$workDir/state/v=$prevV"), bState),
+          Seq("chunk_text"), Seq("n_docs_with"))
+      merged.write.mode("overwrite").parquet(s"$workDir/state/v=$batchId")
+    }
     (spark.read.parquet(s"$workDir/chunks").drop("batch_id"),
       spark.read.parquet(s"$workDir/state/v=$lastV"))
   }
@@ -929,9 +861,7 @@ object Jobs {
       codebooks: IndexedSeq[IndexedSeq[Seq[Float]]],
       indexDir: String,
       scorer: (Column, Column) => Column = graft.ext.Similarity.cosine,
-      filesPerTrigger: Int = 1,
-      stateShufflePartitions: Option[Int] = None): Unit =
-    withShufflePartitions(spark, stateShufflePartitions) {
+      filesPerTrigger: Int = 1): Unit = {
     require(filesPerTrigger >= 1, "filesPerTrigger must be >= 1")
     // codes already on disk were produced by SOME quantizer pair; a
     // resumed/new ingest with different centroids or codebooks would
@@ -954,7 +884,7 @@ object Jobs {
     // BIT-EQUAL at any micro-batch granularity (the q113 contract);
     // bench-facing callers coarsen filesPerTrigger to cut per-trigger
     // startup, StreamSpec pins the fine-grained replay form
-    val q = spark.readStream.schema(schema)
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
@@ -968,11 +898,7 @@ object Jobs {
           .write.mode("overwrite").partitionBy("label")
           .parquet(s"$indexDir/codes/batch=$batchId")
         ()
-      }
-      .option("checkpointLocation", s"$indexDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(s"$indexDir/ckpt"))
   }
 
   /** Streaming ANN query serving — the SEARCH half of the index
@@ -995,11 +921,9 @@ object Jobs {
       outDir: String,
       k: Int,
       nprobe: Int,
-      stateShufflePartitions: Option[Int] = None,
-      filesPerTrigger: Int = 1): Unit =
-    withShufflePartitions(spark, stateShufflePartitions) {
+      filesPerTrigger: Int = 1): Unit = {
     val index = graft.ext.AnnIndex.read(spark, indexDir)
-    val q = spark.readStream.schema(schema)
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
@@ -1008,11 +932,7 @@ object Jobs {
           .write.mode("overwrite")
           .parquet(s"$outDir/results/batch=$batchId")
         ()
-      }
-      .option("checkpointLocation", s"$outDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(s"$outDir/ckpt"))
   }
 
   /** Classifier SERVING as a stream: documents arrive in micro-batches
@@ -1090,16 +1010,13 @@ object Jobs {
       inputDir: String,
       schema: org.apache.spark.sql.types.StructType, // (doc_id, lang, text)
       workDir: String,
-      compactEvery: Int = 0,
-      stateShufflePartitions: Option[Int] = None): DataFrame =
-    withShufflePartitions(spark, stateShufflePartitions) {
+      compactEvery: Int = 0): DataFrame = {
     // the LSH kernels analyze in TWO sessions here: the kept snapshot
     // reads through the caller's session, the batch side through the
     // stream's cloned session — register in both (lazy self-registration
     // binds to whichever SparkSession.active the thread sees, which is
     // the wrong one for at least one side)
     graft.ext.VectorKernels.register(spark)
-    var lastV = publishedVersion(spark, s"$workDir/kept")
     val keptRoot = s"$workDir/kept"
     val docsRoot = s"$workDir/index/docs"
     val bandsRoot = s"$workDir/index/bands"
@@ -1109,148 +1026,136 @@ object Jobs {
     graft.sinks.Writers.recoverStagedSwap(spark, docsRoot)
     graft.sinks.Writers.recoverStagedSwap(spark, bandsRoot)
     val bands = 16; val rowsPerBand = 2
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lastV < batchId) {
-          // phase tags: every action this body drives carries a
-          // neardup:<phase> job description, so a job-level profile
-          // (graft.tools.JobProfile) attributes the per-trigger cost
-          def phase[A](name: String)(f: => A): A = {
-            spark.sparkContext.setJobDescription(s"neardup:$name")
-            try f finally spark.sparkContext.setJobDescription(null)
-          }
-          // the micro-batch executes in a CLONED session whose function
-          // registry may predate the kernels' lazy registration —
-          // register on the batch's own session, not SparkSession.active
-          graft.ext.VectorKernels.register(batch.sparkSession)
-          // fingerprint the batch ONCE — feeds the band join, the
-          // verify join, and (semi-joined to survivors) the published
-          // index rows
-          val batchIdx = graft.ext.Dedup.minhashIndexRows(
-              batch, "doc_id", "text", shingleSize = 3, numHashes = 32)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // resolve through the Hadoop FS API like publishedVersion does —
-          // a java.io.File check is local-FS-only and would silently skip
-          // the stored index (admitting cross-batch dups) on HDFS/S3
-          val bandsHPath = new org.apache.hadoop.fs.Path(bandsRoot)
-          val haveIndex = lastV >= 0 &&
-            bandsHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(bandsHPath)
-          val matches = if (!haveIndex) {
-            val none = batchIdx.limit(0)
-            graft.ext.Dedup.minhashNearDupAgainstBandRows(
-              graft.ext.Dedup.minhashBandRows(none, bands, rowsPerBand),
-              none.select(col("id"), col("sh")), batchIdx,
-              bands, rowsPerBand, threshold = 0.5)
-          } else {
-            // the batch's distinct bp = band·256 + bucket-prefix
-            // values — a BOUNDED driver hop (≤ bands·256 = 4096 rows
-            // by construction, independent of batch or corpus size) —
-            // become a pushed parquet In filter on the stored bands
-            // table, so the stored-side scan prunes to touched
-            // row groups instead of every fingerprint ever admitted.
-            // v < batchId keeps a crash-replayed batch from matching
-            // its own orphaned fingerprints (marker written last).
-            val touched = phase("touched-bp")(graft.ext.Dedup
-              .minhashBandRows(batchIdx, bands, rowsPerBand)
-              .select((col("band") * NearDupBandPrefixVals +
-                nearDupBucketPrefix(col("bucket"))).cast("int").as("bp"))
-              .distinct().collect().map(_.getInt(0)).toSeq)
-            val stored = nearDupStoredBandScan(spark, bandsRoot, touched, batchId)
-            // two-phase verify: materialize the (small) candidate set
-            // first, then prune the stored DOC scan to the candidates'
-            // id-prefix row groups — the verify side stops being the
-            // remaining O(corpus)-per-trigger read. The prefix hop is
-            // bounded at 256 rows by construction.
-            val cand = graft.ext.Dedup.minhashCandidatesAgainstBandRows(
-                stored, batchIdx, bands, rowsPerBand)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val touchedIp = phase("candidates")(cand
-              .select(nearDupDocPrefix(col("corpus_id")).as("ip"))
-              .distinct().collect().map(_.getInt(0)).toSeq)
-            val docs = nearDupStoredDocScan(spark, docsRoot, touchedIp, batchId)
-            val verified = phase("verify")(
-              graft.ext.Dedup.minhashVerifyCandidates(
-                cand, docs, batchIdx, threshold = 0.5)
-                .localCheckpoint(eager = true)) // realize before cand unpersists
-            cand.unpersist()
-            verified
-          }
-          val s0 = batch.join(
-            matches.select(col("batch_id").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti")
-          // in-batch pairs ride the ALREADY-persisted batch fingerprints
-          // (semi-joined down to the cross-batch survivors) instead of
-          // re-tokenizing/re-shingling/re-minhashing the batch text —
-          // the 32-hash/16-band scheme has strictly higher candidate
-          // recall than the old standalone 16/8 pass and every pair is
-          // exact-Jaccard verified, so the pair set is unchanged
-          val s0Idx = batchIdx.join(
-            s0.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-          // min-id-per-cluster closure via the bounded driver
-          // union-find (distributed dupClusters above the pair cap) —
-          // verified pair sets are sparse, and the propagation loop's
-          // checkpoint/probe cascade was the trigger's dominant
-          // scheduler cost
-          val dropIds = phase("in-batch-clusters")(
-            graft.ext.Clusters.dupDropIds(
-              graft.ext.Dedup.minhashNearDupPairsFromIndex(
-                s0Idx, bands, rowsPerBand, threshold = 0.5),
-              "id_a", "id_b"))
-          // materialized once: three publishes consume survivors, and
-          // without the checkpoint each re-executes the batch-side
-          // anti-join plan (s0 + drop set) as its own multi-stage job
-          val survivors = phase("survivors")(
-            s0.join(dropIds, Seq("doc_id"), "left_anti")
-              .localCheckpoint(eager = true))
-          // publish the survivors' fingerprints FIRST (docs + band
-          // posting rows — both derived from the persisted batchIdx by
-          // a semi-join, so survivor text is fingerprinted exactly
-          // once, ever). Order matters for crash-safe replay: the
-          // kept/v= partition below is the replay-skip marker
-          // (publishedVersion reads kept/), so the index partitions
-          // must land before it — a crash between the writes re-runs
-          // the whole batch (all writes are idempotent partition
-          // overwrites) and the v < batchId read filter above keeps
-          // the re-run from seeing its own orphaned rows
-          val survivorIdx = batchIdx.join(
-            survivors.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-          phase("publish-docs")(survivorIdx
-            .withColumn("ip", nearDupDocPrefix(col("id")))
-            .sortWithinPartitions(col("ip"))
-            .write.mode("overwrite").parquet(s"$docsRoot/v=$batchId"))
-          phase("publish-bands")(
-            graft.ext.Dedup.minhashBandRows(survivorIdx, bands, rowsPerBand)
-              .withColumn("bp", (col("band") * NearDupBandPrefixVals +
-                nearDupBucketPrefix(col("bucket"))).cast("int"))
-              .sortWithinPartitions(col("bp"))
-              .write.mode("overwrite").parquet(s"$bandsRoot/v=$batchId"))
-          // APPEND-ONLY publish, marker LAST: each batch lands only its
-          // own survivors under v=<batchId> (idempotent overwrite of
-          // its own partition) — the per-batch write is O(new
-          // survivors), never an O(corpus) snapshot rewrite; readers
-          // union the partitions
-          phase("publish-kept")(survivors
-            .write.mode("overwrite").parquet(s"$keptRoot/v=$batchId"))
-          batchIdx.unpersist()
-          lastV = batchId
-          // periodic index maintenance INSIDE the serialized foreachBatch
-          // (triggers never overlap), after the marker write so the
-          // compacted generation only ever folds published versions —
-          // results are identical with or without it (StreamSpec pin)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            phase("compact")(compactNearDupIndex(spark, workDir))
-        }
-        ()
+    runVersioned(spark, inputDir, schema, 1,
+      keptRoot, s"$workDir/ckpt") { (batch, batchId, prevV) =>
+      // phase tags: every action this body drives carries a
+      // neardup:<phase> job description, so a job-level profile
+      // (graft.tools.JobProfile) attributes the per-trigger cost
+      def phase[A](name: String)(f: => A): A = {
+        spark.sparkContext.setJobDescription(s"neardup:$name")
+        try f finally spark.sparkContext.setJobDescription(null)
       }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    require(lastV >= 0, s"no input files found under $inputDir")
+      // the micro-batch executes in a CLONED session whose function
+      // registry may predate the kernels' lazy registration —
+      // register on the batch's own session, not SparkSession.active
+      graft.ext.VectorKernels.register(batch.sparkSession)
+      // fingerprint the batch ONCE — feeds the band join, the
+      // verify join, and (semi-joined to survivors) the published
+      // index rows
+      val batchIdx = graft.ext.Dedup.minhashIndexRows(
+          batch, "doc_id", "text", shingleSize = 3, numHashes = 32)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // resolve through the Hadoop FS API like publishedVersion does —
+      // a java.io.File check is local-FS-only and would silently skip
+      // the stored index (admitting cross-batch dups) on HDFS/S3
+      val bandsHPath = new org.apache.hadoop.fs.Path(bandsRoot)
+      val haveIndex = prevV >= 0 &&
+        bandsHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(bandsHPath)
+      val matches = if (!haveIndex) {
+        val none = batchIdx.limit(0)
+        graft.ext.Dedup.minhashNearDupAgainstBandRows(
+          graft.ext.Dedup.minhashBandRows(none, bands, rowsPerBand),
+          none.select(col("id"), col("sh")), batchIdx,
+          bands, rowsPerBand, threshold = 0.5)
+      } else {
+        // the batch's distinct bp = band·256 + bucket-prefix
+        // values — a BOUNDED driver hop (≤ bands·256 = 4096 rows
+        // by construction, independent of batch or corpus size) —
+        // become a pushed parquet In filter on the stored bands
+        // table, so the stored-side scan prunes to touched
+        // row groups instead of every fingerprint ever admitted.
+        // v < batchId keeps a crash-replayed batch from matching
+        // its own orphaned fingerprints (marker written last).
+        val touched = phase("touched-bp")(graft.ext.Dedup
+          .minhashBandRows(batchIdx, bands, rowsPerBand)
+          .select((col("band") * NearDupBandPrefixVals +
+            nearDupBucketPrefix(col("bucket"))).cast("int").as("bp"))
+          .distinct().collect().map(_.getInt(0)).toSeq)
+        val stored = nearDupStoredBandScan(spark, bandsRoot, touched, batchId)
+        // two-phase verify: materialize the (small) candidate set
+        // first, then prune the stored DOC scan to the candidates'
+        // id-prefix row groups — the verify side stops being the
+        // remaining O(corpus)-per-trigger read. The prefix hop is
+        // bounded at 256 rows by construction.
+        val cand = graft.ext.Dedup.minhashCandidatesAgainstBandRows(
+            stored, batchIdx, bands, rowsPerBand)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val touchedIp = phase("candidates")(cand
+          .select(nearDupDocPrefix(col("corpus_id")).as("ip"))
+          .distinct().collect().map(_.getInt(0)).toSeq)
+        val docs = nearDupStoredDocScan(spark, docsRoot, touchedIp, batchId)
+        val verified = phase("verify")(
+          graft.ext.Dedup.minhashVerifyCandidates(
+            cand, docs, batchIdx, threshold = 0.5)
+            .localCheckpoint(eager = true)) // realize before cand unpersists
+        cand.unpersist()
+        verified
+      }
+      val s0 = batch.join(
+        matches.select(col("batch_id").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+      // in-batch pairs ride the ALREADY-persisted batch fingerprints
+      // (semi-joined down to the cross-batch survivors) instead of
+      // re-tokenizing/re-shingling/re-minhashing the batch text —
+      // the 32-hash/16-band scheme has strictly higher candidate
+      // recall than the old standalone 16/8 pass and every pair is
+      // exact-Jaccard verified, so the pair set is unchanged
+      val s0Idx = batchIdx.join(
+        s0.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+      // min-id-per-cluster closure via the bounded driver
+      // union-find (distributed dupClusters above the pair cap) —
+      // verified pair sets are sparse, and the propagation loop's
+      // checkpoint/probe cascade was the trigger's dominant
+      // scheduler cost
+      val dropIds = phase("in-batch-clusters")(
+        graft.ext.Clusters.dupDropIds(
+          graft.ext.Dedup.minhashNearDupPairsFromIndex(
+            s0Idx, bands, rowsPerBand, threshold = 0.5),
+          "id_a", "id_b"))
+      // materialized once: three publishes consume survivors, and
+      // without the checkpoint each re-executes the batch-side
+      // anti-join plan (s0 + drop set) as its own multi-stage job
+      val survivors = phase("survivors")(
+        s0.join(dropIds, Seq("doc_id"), "left_anti")
+          .localCheckpoint(eager = true))
+      // publish the survivors' fingerprints FIRST (docs + band
+      // posting rows — both derived from the persisted batchIdx by
+      // a semi-join, so survivor text is fingerprinted exactly
+      // once, ever). Order matters for crash-safe replay: the
+      // kept/v= partition below is the replay-skip marker
+      // (publishedVersion reads kept/), so the index partitions
+      // must land before it — a crash between the writes re-runs
+      // the whole batch (all writes are idempotent partition
+      // overwrites) and the v < batchId read filter above keeps
+      // the re-run from seeing its own orphaned rows
+      val survivorIdx = batchIdx.join(
+        survivors.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+      phase("publish-docs")(survivorIdx
+        .withColumn("ip", nearDupDocPrefix(col("id")))
+        .sortWithinPartitions(col("ip"))
+        .write.mode("overwrite").parquet(s"$docsRoot/v=$batchId"))
+      phase("publish-bands")(
+        graft.ext.Dedup.minhashBandRows(survivorIdx, bands, rowsPerBand)
+          .withColumn("bp", (col("band") * NearDupBandPrefixVals +
+            nearDupBucketPrefix(col("bucket"))).cast("int"))
+          .sortWithinPartitions(col("bp"))
+          .write.mode("overwrite").parquet(s"$bandsRoot/v=$batchId"))
+      // APPEND-ONLY publish, marker LAST: each batch lands only its
+      // own survivors under v=<batchId> (idempotent overwrite of
+      // its own partition) — the per-batch write is O(new
+      // survivors), never an O(corpus) snapshot rewrite; readers
+      // union the partitions
+      phase("publish-kept")(survivors
+        .write.mode("overwrite").parquet(s"$keptRoot/v=$batchId"))
+      batchIdx.unpersist()
+      // periodic index maintenance INSIDE the serialized foreachBatch
+      // (triggers never overlap), after the marker write so the
+      // compacted generation only ever folds published versions —
+      // results are identical with or without it (StreamSpec pin)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        phase("compact")(compactNearDupIndex(spark, workDir))
+    }
     spark.read.parquet(keptRoot).drop("v")
   }
 
@@ -1380,7 +1285,7 @@ object Jobs {
     // complete any interrupted compaction swap before new batches land
     // beside a stranded staging copy
     graft.sinks.Writers.recoverStagedSwap(spark, s"$workDir/index")
-    val q = spark.readStream.schema(schema)
+    runAvailableNow(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger)
       .parquet(inputDir)
       .writeStream
@@ -1388,11 +1293,7 @@ object Jobs {
         graft.sinks.Writers.idempotentBatchWrite(
           fingerprint(batch), batchId, s"$workDir/index")
         ()
-      }
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(s"$workDir/ckpt"))
     val root = new org.apache.hadoop.fs.Path(s"$workDir/index")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"no input files found under $inputDir")
@@ -1419,7 +1320,7 @@ object Jobs {
       filesPerTrigger: Int = 1): Unit = {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val media = batch.persist()
         try {
@@ -1433,13 +1334,15 @@ object Jobs {
             .write.mode("append").parquet(dlqPath)
         } finally { media.unpersist(); () }
         ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(checkpoint))
   }
 
+  /** O-61/O-62: foreachBatch dual-write — persist the batch once, split
+    * good/bad, write each side plus alerts (ref: streaming/consumer.py:
+    * 59-102 routes good→DynamoDB, bad→DLQ+S3, surges→SNS). Sinks are
+    * parquet dirs here; exactly-once per sink within a batch comes from
+    * the persisted split + checkpointed batch ids.
+    */
   def runRoutingStream(
       spark: SparkSession,
       inputDir: String,
@@ -1449,7 +1352,7 @@ object Jobs {
       checkpoint: String): Unit = {
     val schema = graft.schema.Schemas.events
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val annotated = Validate.annotate(batch, eventRules).persist()
         try {
@@ -1458,10 +1361,6 @@ object Jobs {
           annotated.filter(eventAlert).write.mode("append").parquet(alertPath)
         } finally annotated.unpersist()
         ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, Some(checkpoint))
   }
 }

@@ -63,7 +63,13 @@ object Stateful {
         })
   }
 
-  private val streamId = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+
+  /** The RocksDB state store `transformWithState` requires, scoped to
+    * each run that uses it.
+    */
+  private val RocksDb =
+    Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** One AvailableNow pass of [[risingEdgeAlerts]] over the events
     * table as a REAL stateful streaming query (memory sink), returning
@@ -76,20 +82,12 @@ object Stateful {
       dir: String,
       threshold: Double,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    Jobs.withShufflePartitions(spark, stateShufflePartitions) {
+    Jobs.withConf(spark, Jobs.ShufflePartitions, stateShufflePartitions.map(_.toString)) {
     import spark.implicits._
     val typed = graft.Tables.eventsStream(spark, dir)
       .selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
-    val name = s"graft_stateful_edges_${streamId.incrementAndGet()}"
-    val q = risingEdgeAlerts(spark, typed, threshold)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    Jobs.runToMemorySink(spark,
+      risingEdgeAlerts(spark, typed, threshold).toDF(), "graft_stateful_edges")
   }
 
   /** [[risingEdgeAlerts]] re-expressed on `transformWithState` — the
@@ -138,29 +136,17 @@ object Stateful {
       dir: String,
       threshold: Double,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    Jobs.withShufflePartitions(spark, stateShufflePartitions) {
+    Jobs.withConf(spark, Jobs.ShufflePartitions, stateShufflePartitions.map(_.toString)) {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Jobs.withConf(spark, StateStoreProvider, RocksDb) {
       val typed = graft.Tables.eventsStream(spark, dir)
         .selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
       val alerts = typed
         .groupByKey(_.user_id)
         .transformWithState(new RisingEdgeProcessor(threshold),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stateful_tws_${streamId.incrementAndGet()}"
-      val q = alerts.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Jobs.runToMemorySink(spark, alerts.toDF(), "graft_stateful_tws")
+    }
   }
 
   /** Rate-limit THROTTLE as a stream: keep an event only when it is at
@@ -211,14 +197,10 @@ object Stateful {
       inputDir: String,
       cooldownUs: Long,
       stateShufflePartitions: Option[Int] = None): DataFrame =
-    Jobs.withShufflePartitions(spark, stateShufflePartitions) {
+    Jobs.withConf(spark, Jobs.ShufflePartitions, stateShufflePartitions.map(_.toString)) {
     import spark.implicits._
     require(cooldownUs > 0, "cooldown must be positive")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Jobs.withConf(spark, StateStoreProvider, RocksDb) {
       val typed = spark.readStream.schema(graft.schema.Schemas.events)
         .option("maxFilesPerTrigger", 1)
         .parquet(inputDir)
@@ -227,16 +209,8 @@ object Stateful {
         .groupByKey(_.user_id)
         .transformWithState(new ThrottleProcessor(cooldownUs),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stream_throttle_${streamId.incrementAndGet()}"
-      val q = kept.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Jobs.runToMemorySink(spark, kept.toDF(), "graft_stream_throttle")
+    }
   }
 
   /** Holt level+trend smoothing as TRUE incremental streaming state —
@@ -306,14 +280,10 @@ object Stateful {
       betaDen: Long = 4L,
       stateShufflePartitions: Option[Int] = None,
       filesPerTrigger: Int = 1): DataFrame =
-    Jobs.withShufflePartitions(spark, stateShufflePartitions) {
+    Jobs.withConf(spark, Jobs.ShufflePartitions, stateShufflePartitions.map(_.toString)) {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Jobs.withConf(spark, StateStoreProvider, RocksDb) {
       val typed = spark.readStream.schema(graft.schema.Schemas.events)
         .option("maxFilesPerTrigger", filesPerTrigger)
         .parquet(inputDir)
@@ -323,36 +293,10 @@ object Stateful {
         .groupByKey(_.event_type)
         .transformWithState(new HoltProcessor(scale, alphaDen, betaDen),
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      val name = s"graft_stream_holt_${streamId.incrementAndGet()}"
-      val q = smoothed.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
+      Jobs.runToMemorySink(spark, smoothed.toDF(), "graft_stream_holt")
         .select(col("key"), timestamp_seconds(col("hr_s")).as("hr"),
           col("n"), col("level_scaled"), col("trend_scaled"),
           col("forecast_scaled"))
-    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  /** Streaming wrapper: memory-stream/file-source events → rising-edge
-    * alerts into a memory sink table named `sinkName`.
-    */
-  def startRisingEdgeStream(
-      spark: SparkSession,
-      events: DataFrame,
-      threshold: Double,
-      sinkName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val typed = events.selectExpr("event_id", "ts", "user_id", "value").as[KeyedEvent]
-    risingEdgeAlerts(spark, typed, threshold)
-      .writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .start()
+    }
   }
 }

@@ -89,8 +89,21 @@ class StatefulSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath, dst.toPath)
       dst.setLastModified(t0 + i * 1000L)
     }
-    val kept = Stateful.runThrottleStream(spark, in, cooldownUs = 5L * us)
+    // the run scopes the state-store provider and the state partition
+    // count to itself: both read as before once it returns or throws
+    val confKeys = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions")
+    def confs() = confKeys.map(spark.conf.getOption)
+    val before = confs()
+    val kept = Stateful.runThrottleStream(spark, in, cooldownUs = 5L * us,
+        stateShufflePartitions = Some(3))
       .select(col("user_id"), col("ts_us")).as[(Long, Long)].collect().toSet
+    assert(confs() == before)
+    intercept[Exception] {
+      Stateful.runThrottleStream(spark, s"$tmp/missing", cooldownUs = 5L * us,
+        stateShufflePartitions = Some(3))
+    }
+    assert(confs() == before)
     // batch reference: keep 0 (anchor), drop 4, keep 8, drop 12; key 2 keeps its only event
     val batch = graft.ext.TimeSeries.throttle(
       rows.map { case (u, t) => (u, t, 0L) }.toDS(), 5L * us)

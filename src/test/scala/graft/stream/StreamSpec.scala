@@ -352,6 +352,21 @@ class StreamSpec extends SparkSpec {
       .as[(Long, String, Double)].collect().toSet
     assert(v0 == Set((1L, "a1", 11.0), (3L, "c", 30.0)))
 
+    // WIPED checkpoint: the file source re-delivers every slice while
+    // v=0..2 are already published — each batch must skip, so no
+    // published snapshot is rewritten with later changes merged in
+    def snap(v: Long) = spark.read.parquet(s"$tmp/snap/v=$v")
+      .as[(Long, String, Double)].collect().toSet
+    val published = (0L to 2L).map(snap)
+    def rmrf(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete(); ()
+    }
+    rmrf(new java.io.File(s"$tmp/ckpt"))
+    val vReplay = graft.stream.Jobs.runChangelogStream(spark, base, in,
+      allChanges.schema, Seq("k"), "seq", "op", s"$tmp/snap", s"$tmp/ckpt")
+    assert(vReplay == 2L)
+    assert((0L to 2L).map(snap) == published)
+
     // RESUMED checkpoint: a late slice 3 arrives and the SAME
     // checkpoint dir is reused — the file source skips batches 0-2, and
     // the recovered version pointer (highest v=*) must make the new
