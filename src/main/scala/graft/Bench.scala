@@ -72,7 +72,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // Self-defense against a busy host (two rounds of polluted final
     // records): if the 1-minute loadavg at start exceeds cpus/8, wait
     // once for the host to quiesce before measuring. Whatever happens,
@@ -87,29 +87,20 @@ object Bench {
       Thread.sleep(90000)
       loadStart = loadavg1m()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned session-wide so Tables.withNanosAsLong's save/restore is
-      // idempotent under the parallel warmup pool (see Verify)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
 
     def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, d) => name -> d.run }
+    val streamingSet = SparkEntry.queries.values.filter(_.streaming).map(_.name).toSet
     // Warmup: batch queries only, overlapped on a small thread pool
     // (guide §2.6 — warmup is untimed, so back-filling executor slots
     // across queries is pure wall-clock savings), plus ONE streaming
     // representative to class-load the streaming machinery. The other
-    // 41 streams gain nothing from an sf0.001 pass — their timed cost
+    // 42 streams gain nothing from an sf0.001 pass — their timed cost
     // is fixed checkpoint/state-store startup, not codegen — and were
     // costing ~40×3-5 s of the warmup that pushed the r14 driver run
     // over its wall budget. A wall-clock cap (SPARK_GRAFT_WARMUP_BUDGET_S)
@@ -124,7 +115,7 @@ object Bench {
         (System.nanoTime() - warmupStart) / 1e9 > warmupBudgetS
       val streamRep = "q19_stream_validate"
       val warmSet = queries.filter { case (name, _) =>
-        !SparkEntry.streamingQueries.contains(name) || name == streamRep
+        !streamingSet.contains(name) || name == streamRep
       }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       warmSet.foreach { case (_, fn) =>
@@ -233,7 +224,6 @@ object Bench {
     // noise-hit 3 s batch query unretried (the r11 q38/q39 artifact —
     // 0.45 s-class queries recorded at ~3 s in the one run where a
     // spike landed on them).
-    val streamingSet = SparkEntry.streamingQueries
     // errored queries carry no time — rank only real measurements
     val firstPassOk = firstPass.filter { case (k, _) => qTime.containsKey(k) }
     val (streamPass, batchPass) =
@@ -302,7 +292,7 @@ object Bench {
     // state-store init per run) — split them out so the batch trend is
     // readable round-over-round
     val streamTotal = results
-      .filter { case (k, _) => SparkEntry.streamingQueries.contains(k) }
+      .filter { case (k, _) => streamingSet.contains(k) }
       .map(_._2).sum
     val loadEnd = loadavg1m()
     // contamination: START loadavg breach (the END value is dominated
@@ -336,7 +326,7 @@ object Bench {
         .map { case (k, v) => jstr(k) + ":" + jstr(v) }
         .mkString("{", ",", "}")
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","streaming_total_s":$streamTotal,"batch_total_s":${total - streamTotal},"raw_total_s":$rawTotal,"retried":$retriedJson,"anomaly_retried":$anomalyRetriedJson,"anomalies_after_retry":$anomalyJson,"n_streaming_queries":${SparkEntry.streamingQueries.size},"cpus":$cpus,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"query_loadavg":$qLoadJson,"errors":$errJson,"failed":$failed,"contaminated":$contaminated}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","streaming_total_s":$streamTotal,"batch_total_s":${total - streamTotal},"raw_total_s":$rawTotal,"retried":$retriedJson,"anomaly_retried":$anomalyRetriedJson,"anomalies_after_retry":$anomalyJson,"n_streaming_queries":${streamingSet.size},"cpus":$cpus,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"query_loadavg":$qLoadJson,"errors":$errJson,"failed":$failed,"contaminated":$contaminated}"""
     emitted.set(true) // suite completed: the kill-safety hook stands down
     println(line)
     // BENCH_r*.json captures only the stdout tail, which loses the

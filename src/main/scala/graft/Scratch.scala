@@ -1,10 +1,10 @@
 package graft
 
-/** Host-local scratch policy, shared by the harness mains
-  * ([[Bench]], [[Verify]], `tools.BenchOne`) and the query scratch
-  * allocator: prefer the tmpfs mount when one is writable —
-  * streaming checkpoints, sink dirs, and shuffle spill are thousands
-  * of tiny fsync'd files, and the bench host mounts a large tmpfs.
+/** Host-local scratch policy, shared by the harness session
+  * ([[Harness]]) and the query scratch allocator: prefer the tmpfs
+  * mount when one is writable — streaming checkpoints, sink dirs,
+  * and shuffle spill are thousands of tiny fsync'd files, and the
+  * bench host mounts a large tmpfs.
   * Harness-local only; cluster deployments provision their own
   * local dirs and pass real storage paths into the job functions.
   */

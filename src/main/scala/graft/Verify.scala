@@ -26,20 +26,8 @@ object Verify {
     val outDir = args(1)
     // optional trailing args: run only these queries (dev iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", Scratch.warehouseDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      // pinned session-wide so Tables.withNanosAsLong's save/restore is
-      // idempotent under the thread pool (prev is always Some("true"));
-      // read-path harmless for non-nanos files
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,13 +42,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.queries.values
+      .flatMap(d => d.oracle.map(sql => s"${q(d.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     val t0 = System.nanoTime()
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val todo = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, d) => name -> d.run }
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
     def dump(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,

@@ -147,21 +147,6 @@ object Mpeg1 {
 
   private val WinD: Array[Double] = winDRaw.map(_ / calibration._1)
 
-  /** Test probe: unquantized cascade with the calibrated window. */
-  private[ext] def cascadeCalibrated(x: Array[Double]): Array[Double] = {
-    val an = new Analysis
-    val sy = new Synthesis(WinD)
-    val out = new Array[Double](x.length)
-    val s = new Array[Double](32)
-    var t = 0
-    while ((t + 1) * 32 <= x.length) {
-      an.step(x, t * 32, s)
-      sy.step(s, out, t * 32)
-      t += 1
-    }
-    out
-  }
-
   /** Unquantized float cascade (analysis → synthesis with the UNSCALED
     * winDRaw) — used only for gain/delay calibration at init.
     */

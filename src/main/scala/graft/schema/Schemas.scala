@@ -2,10 +2,6 @@ package graft.schema
 
 import org.apache.spark.sql.types._
 
-/** Declared schemas: ports of the reference's record shapes (FIXTURES.md §A).
-  * Spark does not enforce nullability on read — enforcement is the job of
-  * `Transform.schemaSplit` / the DQ rules, these are declarations only.
-  */
 /** Typed Silver row (SURVEY.md §1.1: `Dataset[CoinTick]` for the typed
   * core) — required fields are non-Option, matching `cryptoRequired`;
   * the rest mirror EXPECTED_SCHEMA nullability.
@@ -27,6 +23,10 @@ final case class CryptoTick(
     update_date: java.sql.Date,
     last_updated_ts: java.sql.Timestamp)
 
+/** Declared schemas: ports of the reference's record shapes (FIXTURES.md §A).
+  * Spark does not enforce nullability on read — enforcement is the job of
+  * `Transform.schemaSplit` / the DQ rules, these are declarations only.
+  */
 object Schemas {
 
   /** Typed view of a Silver frame — compile-time field checks for the
@@ -39,69 +39,11 @@ object Schemas {
     df.as[CryptoTick]
   }
 
-  /** Silver crypto tick — port of EXPECTED_SCHEMA
-    * (ref: glue/data_transform_s3.py:26-40) plus the metadata columns
-    * added at ref :127-128.
-    */
-  val cryptoTick: StructType = StructType(Seq(
-    StructField("coin_id", StringType, nullable = false),
-    StructField("symbol", StringType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("current_price", DoubleType, nullable = false),
-    StructField("market_cap", LongType, nullable = false),
-    StructField("market_cap_rank", IntegerType, nullable = true),
-    StructField("total_volume", LongType, nullable = true),
-    StructField("high_24h", DoubleType, nullable = true),
-    StructField("low_24h", DoubleType, nullable = true),
-    StructField("price_change_24h", DoubleType, nullable = true),
-    StructField("price_change_percentage_24h", DoubleType, nullable = true),
-    StructField("circulating_supply", DoubleType, nullable = true),
-    StructField("total_supply", DoubleType, nullable = true),
-    StructField("update_date", DateType, nullable = false),
-    StructField("last_updated_ts", TimestampType, nullable = false)))
-
   /** Required (non-nullable) Silver fields — the schema-enforcement set
     * (ref: glue/data_transform_s3.py:27-31, third arg False).
     */
   val cryptoRequired: Seq[String] =
     Seq("coin_id", "symbol", "name", "current_price", "market_cap")
-
-  /** Streaming payload (ref: streaming/producer.py:19-28). Decimal for
-    * exact threshold compares, faithful to the consumer's
-    * `parse_float=Decimal` (ref: streaming/consumer.py:38).
-    */
-  val streamPayload: StructType = StructType(Seq(
-    StructField("coin_id", StringType, nullable = false),
-    StructField("symbol", StringType, nullable = true),
-    StructField("name", StringType, nullable = true),
-    StructField("current_price", DecimalType(38, 18), nullable = true),
-    StructField("market_cap", DecimalType(38, 18), nullable = true),
-    StructField("price_change_24h", DecimalType(38, 18), nullable = true),
-    StructField("price_change_percentage_24h", DecimalType(38, 18), nullable = true),
-    StructField("timestamp", TimestampType, nullable = true)))
-
-  /** DLQ / violation record (ref: glue/data_transform_s3.py:89-94). */
-  val dlqRecord: StructType = StructType(Seq(
-    StructField("raw_data", StringType, nullable = false),
-    StructField("error_reason", StringType, nullable = false),
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("validation_type", StringType, nullable = true)))
-
-  /** Deequ-style metrics row (ref: glue/data_quality_pydeequ.py:61). */
-  val dqMetric: StructType = StructType(Seq(
-    StructField("entity", StringType, nullable = false),
-    StructField("instance", StringType, nullable = false),
-    StructField("name", StringType, nullable = false),
-    StructField("value", DoubleType, nullable = true)))
-
-  /** Check-results row (ref: glue/data_quality_pydeequ.py:91). */
-  val dqCheckResult: StructType = StructType(Seq(
-    StructField("check", StringType, nullable = false),
-    StructField("check_level", StringType, nullable = false),
-    StructField("check_status", StringType, nullable = false),
-    StructField("constraint", StringType, nullable = false),
-    StructField("constraint_status", StringType, nullable = false),
-    StructField("constraint_message", StringType, nullable = true)))
 
   /** Events stream table (TESTDATA.md). */
   val events: StructType = StructType(Seq(

@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sink-side writers (O-51..O-58), re-expressing the reference's S3
+/** Sink-side writers (O-52..O-58), re-expressing the reference's S3
   * layouts with Spark writers.
   *
   * Scale posture: `coalesce(1)` is reserved for genuinely tiny outputs
@@ -12,13 +12,6 @@ import org.apache.spark.sql.functions._
   * overwrite for upserts.
   */
 object Writers {
-
-  /** O-51: single-file JSON landing (Bronze). The reference's
-    * `mergeSchema` write option is dropped — it's a read option, a no-op
-    * on write (ref: glue/data_ingestion_s3.py:33-36; SURVEY.md O-51).
-    */
-  def jsonSingleFile(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(path)
 
   /** O-52: snappy parquet, overwrite, unpartitioned
     * (ref: glue/data_transform_s3.py:142-148).

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: prints the RAW recall values behind the q23b/q107b/q109b
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object AnnProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     graft.ext.VectorKernels.register(spark)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val clustered = graft.ext.Similarity.kmeansLabels(base, "vec_id", "embedding",

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.fixtures.MediaFixtures.mpegStripFrame
+
 /** Single-threaded codec micro-bench (no Spark): per-clip encode /
   * decode cost of the MPEG-1 video wire on the q250-family strip
   * corpus — the number that bounds how much a synth-heavy video
@@ -7,32 +9,8 @@ package graft.tools
   * `sbt "runMain graft.tools.CodecBench"`.
   */
 object CodecBench {
-  private def stripLevels(s: Long): Array[Int] = {
-    val lev = new Array[Int](11); lev(0) = (s % 3).toInt
-    var i = 1
-    while (i < 11) {
-      val d = ((s * (i + 3) + i.toLong * i) % 2).toInt
-      lev(i) = (lev(i - 1) + 1 + d) % 3; i += 1
-    }
-    lev
-  }
-  private def frame(s: Long): Array[Byte] = {
-    val lev = stripLevels(s); val bgr = new Array[Byte](44 * 24 * 3)
-    var y = 0
-    while (y < 24) {
-      var x = 0
-      while (x < 44) {
-        val v = (40 + 88 * lev(x / 4)).toByte
-        val o = (y * 44 + x) * 3
-        bgr(o) = v; bgr(o + 1) = v; bgr(o + 2) = v; x += 1
-      }
-      y += 1
-    }
-    bgr
-  }
-
   def main(args: Array[String]): Unit = {
-    val frames = (0 until 8).map(f => frame(97L + f * 31))
+    val frames = (0 until 8).map(f => mpegStripFrame(97L + f * 31))
     (0 until 50).foreach { _ =>
       graft.ext.Mpeg1Video.decode(
         graft.ext.Mpeg1Video.encode(44, 24, frames, qscale = 3))

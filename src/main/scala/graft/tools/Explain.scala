@@ -1,22 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one or more queries.
   * `runMain graft.tools.Explain <sfdir> <query>...`
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(graft.Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     args.tail.foreach { q =>
       println(s"========== $q ==========")
-      graft.SparkEntry.queries(q)(spark, args.head).explain("formatted")
+      graft.SparkEntry.queries(q).run(spark, args.head).explain("formatted")
     }
     spark.stop()
   }

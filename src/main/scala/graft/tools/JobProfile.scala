@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profile of a named query (dev tool): runs it under a
   * listener recording every Spark job's wall time and call site, then
@@ -15,13 +14,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <query> [<query> ...]")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.Scratch.sparkLocalDir)
-      .config("spark.sql.warehouse.dir", graft.Scratch.warehouseDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Harness.session(graft.Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = java.util.Collections.synchronizedList(
@@ -43,7 +36,7 @@ object JobProfile {
     for (q <- args) {
       rows.clear()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(q)(spark, dir)
+      graft.SparkEntry.queries(q).run(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()

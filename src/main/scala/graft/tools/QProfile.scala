@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, length, sum}
 
 /** Stage-level profile of a synth→decode→census query (dev tool):
@@ -11,25 +10,22 @@ import org.apache.spark.sql.functions.{col, length, sum}
 object QProfile {
   def main(args: Array[String]): Unit = {
     val dir = sys.env("SPARK_GRAFT_SF_DIR")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Harness.cpus
+    val spark = graft.Harness.session(cpus)
     def t[A](label: String)(f: => A): A = {
       val s = System.nanoTime(); val r = f
       println(f"PROF $label ${(System.nanoTime() - s) / 1e9}%.2f s"); r
     }
     (0 until 2).foreach { round =>
       t(s"r$round encode-only")(
-        graft.SparkEntry.synthMpegVideoMedia(spark, dir)
+        graft.fixtures.MediaFixtures.synthMpegVideoMedia(spark, dir)
           .select(sum(length(col("payload")))).collect())
       val fh = t(s"r$round decode+checkpoint")(
         graft.ext.Multimodal.videoFrameHashes(spark,
-          graft.SparkEntry.synthMpegVideoMedia(spark, dir),
-          stride = 2, partitions = 32).toDF().localCheckpoint(true))
+          graft.fixtures.MediaFixtures.synthMpegVideoMedia(spark, dir),
+          stride = 2, partitions = cpus.toInt).toDF().localCheckpoint(true))
       t(s"r$round census")(
-        graft.SparkEntry.videoKeyframeCensus(fh).collect())
+        graft.queries.MediaQueries.videoKeyframeCensus(fh).collect())
     }
     spark.stop()
   }

@@ -6,9 +6,12 @@ package graft
   */
 class ContractSpec extends SparkSpec {
 
-  test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql keys without queries: $orphans")
+  test("rows-only queries are exactly the four QueryDef.oracle names") {
+    // every other query is hash-checked against its DuckDB oracle; a
+    // dropped oracle would silently weaken the check to a row count
+    val rowsOnly = SparkEntry.queries.values.filter(_.oracle.isEmpty).map(_.name).toSet
+    assert(rowsOnly == Set("q23_ivf_topk", "q32_approx_distinct",
+      "q107_pq_codes", "q109_ivf_adc_topk"))
   }
 
   test("docs/COVERAGE.md tracks every query, and cites no stale ones") {
@@ -32,10 +35,27 @@ class ContractSpec extends SparkSpec {
   test("every query runs exception-free and non-empty on sf0.001") {
     val dir = "/root/testdata/sf0.001"
     val empties = Seq.newBuilder[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, dir).count() // throws -> test fails with the name visible
-      if (n == 0) empties += name
+    // QueryDef.streaming must be true exactly for the queries that start
+    // a stream: Bench books those under the streaming total.
+    // onQueryStarted fires synchronously inside start(), so the count is
+    // complete once the query function returns.
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = { started.incrementAndGet(); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
+    val mislabeled = Seq.newBuilder[String]
+    spark.streams.addListener(listener)
+    try SparkEntry.queries.foreach { case (name, d) =>
+      started.set(0)
+      val n = d.run(spark, dir).count() // throws -> test fails with the name visible
+      if (n == 0) empties += name
+      if ((started.get() > 0) != d.streaming) mislabeled += s"$name (streams started: ${started.get()})"
+    } finally spark.streams.removeListener(listener)
+    assert(mislabeled.result().isEmpty,
+      s"QueryDef.streaming disagrees with what the query runs: ${mislabeled.result()}")
     // empty results are legal for threshold queries but worth knowing;
     // q12/q13 near-dup pairs can be empty at the tiniest scale
     val allowedEmpty = Set("q12_jaccard_pairs", "q13_minhash_pairs")
@@ -93,11 +113,11 @@ class ContractSpec extends SparkSpec {
     // census must reproduce every stage count AND the survivor id sum
     val dir = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
-    val audit = SparkEntry.queries("q152_funnel_audit")(spark, dir)
+    val audit = SparkEntry.queries("q152_funnel_audit").run(spark, dir)
       .groupBy(col("verdict")).agg(
         count(lit(1)).as("n"), sum(col("doc_id")).as("ids"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val funnel = SparkEntry.queries("q147_web_funnel")(spark, dir)
+    val funnel = SparkEntry.queries("q147_web_funnel").run(spark, dir)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     def n(v: String) = audit.get(v).map(_._1).getOrElse(0L)
     assert(n("1_blocklist") + n("2_quality") + n("3_duplicate") + n("kept")

@@ -10,7 +10,7 @@ class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+    SparkEntry.queries(q).run(spark, dir).queryExecution.executedPlan.toString
 
   /** Executed plans of every action a query runs INTERNALLY (for
     * queries that materialize eagerly and return a LocalTableScan),
@@ -29,7 +29,7 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      SparkEntry.queries(q)(spark, dir).collect()
+      SparkEntry.queries(q).run(spark, dir).collect()
       // listener events post asynchronously; poll until stable
       var last = -1
       var same = 0
@@ -256,7 +256,7 @@ class PlanSpec extends SparkSpec {
     // list — the cap is a pre-join index filter, not a post-join score
     // filter: the cached fragment both sides consume must carry a
     // `df <= cap` predicate
-    val df = SparkEntry.queries("q92b_tfidf_capped")(spark, dir)
+    val df = SparkEntry.queries("q92b_tfidf_capped").run(spark, dir)
     val cached = df.queryExecution.withCachedData.collect {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
         r.cachedPlan.toString

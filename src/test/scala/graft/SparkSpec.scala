@@ -9,7 +9,7 @@ trait SparkSpec extends AnyFunSuite {
   def sqlImplicits: org.apache.spark.sql.SQLImplicits = spark.implicits
 
   /** Scratch dir deleted at JVM exit — same hygiene as
-    * `SparkEntry.tempDir`; without it every `sbt test` run leaves
+    * `queries.Shared.tempDir`; without it every `sbt test` run leaves
     * dozens of graft-* trees in /tmp.
     */
   def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
